@@ -45,7 +45,7 @@ REPS = int(os.environ.get("CURVE_REPS", "2"))
 def main() -> None:
     from jaccard_ml_spark.config import DedupConfig
     from jaccard_ml_spark.plans.checkpoint import CheckpointStore
-    from jaccard_ml_spark.session import get_spark
+    from jaccard_ml_spark.session import get_spark, host_cpus
     from jaccard_ml_spark.sources.generator import (
         ensure_generated,
         generate_transcripts_sharded,
@@ -60,7 +60,7 @@ def main() -> None:
     ensure_generated(tx_dir, generate_transcripts_sharded,
                      n_convs=TOTAL, seed=4242, n_shards=32)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     spark = get_spark(master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 8),
                       app_name="incremental-curve")

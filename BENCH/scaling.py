@@ -71,15 +71,7 @@ CACHE_LEVEL = (None if os.environ.get("SCALING_CACHE_LEVEL") == "memory"
 # write replaces the cache materialization in the same timed window —
 # the A/B measures (+1 bucketed parquet write) vs (−2 fat exchanges).
 BUCKETED = os.environ.get("SCALING_BUCKETED_SETS", "0") == "1"
-# SCALING_SEMI_FILTER=1: verify_pairs broadcasts the candidate-id set
-# as a leftsemi filter on the sets side (operators/verify.py). The r4
-# A/B that rejected this (327s on vs 248s off at 45M) ran BEFORE the
-# persist fix (the candidate subtree evaluated twice); with candidates
-# persisted the filter drops ~67%% of the fat items rows from verify's
-# two exchanges + sorts — re-measured here as the remaining
-# byte-remover on the scaling gate.
-SEMI = os.environ.get("SCALING_SEMI_FILTER", "0") == "1"
-CFG = DedupConfig(verify_semi_filter=SEMI)
+CFG = DedupConfig()
 from jaccard_ml_spark.session import get_spark
 from jaccard_ml_spark.sources.tables import read_transcripts
 
@@ -275,9 +267,7 @@ if warm_mod > 0:
                           sets_store=make_store("warm") if BUCKETED
                           else None, sets_buckets=parts)
     wres.pairs.count(); wres.clusters.count()
-    wres.shingle_sets.unpersist(); wres.pairs.unpersist()
-    from jaccard_ml_spark.operators import verify as _verify
-    _verify.release_persisted()   # warmup's semi-filter candidate cache
+    wres.release()
     shutil.rmtree(ckpt_root + "/warm", ignore_errors=True)
 warmup_sec = time.monotonic() - t_w0
 
@@ -309,9 +299,7 @@ pair_sig = sorted((r.id_a, r.id_b) for r in
                   res.pairs.select("id_a", "id_b").collect())
 clus_sig = sorted((r.id, r.cluster_id) for r in res.clusters.collect())
 rhash = hashlib.sha256(repr((pair_sig, clus_sig)).encode()).hexdigest()[:16]
-res.shingle_sets.unpersist(); res.pairs.unpersist()
-from jaccard_ml_spark.operators.verify import release_persisted
-release_persisted()
+res.release()
 shutil.rmtree(ckpt_root, ignore_errors=True)
 
 print("RESULT " + json.dumps({
@@ -321,7 +309,7 @@ print("RESULT " + json.dumps({
     "warmup_sec": round(warmup_sec, 2),
     "turns_per_sec": round(n_turns / wall, 1),
     "cache_mem_mb": cache_mem_mb, "cache_disk_mb": cache_disk_mb,
-    "bucketed_sets": BUCKETED, "semi_filter": SEMI,
+    "bucketed_sets": BUCKETED,
     "result_hash": rhash,
 }))
 spark.stop()
@@ -598,16 +586,16 @@ def _same_config(r: dict, n_convs: int) -> bool:
     samples predate that field and fall back to a turns-per-conv
     heuristic (~7.8 at the generator's default min/max_turns — brittle
     if those change, which is why new samples record n_convs). Config
-    match: the bucketed-sets flag (absent = False on legacy samples)."""
+    match: the bucketed-sets flag (absent = False on legacy samples);
+    samples of the deleted verify semi-filter never match."""
     if r.get("n_convs") is not None:
         same_input = r["n_convs"] == n_convs
     else:
         same_input = abs(r.get("turns", 0) - n_convs * 7.8) < n_convs * 1.0
     bucketed = os.environ.get("SCALING_BUCKETED_SETS", "0") == "1"
-    semi = os.environ.get("SCALING_SEMI_FILTER", "0") == "1"
     return (same_input
             and bool(r.get("bucketed_sets", False)) == bucketed
-            and bool(r.get("semi_filter", False)) == semi)
+            and not r.get("semi_filter", False))
 
 
 def write_report(runs: dict, mode: str, lo: int, hi: int,
@@ -665,10 +653,6 @@ def write_report(runs: dict, mode: str, lo: int, hi: int,
                if bucketed else
                "**persisted-cache** — the fused sets table is persisted "
                "(DISK_ONLY on tmpfs) and verify sort-merge-exchanges it")
-    if rlo.get("semi_filter"):
-        variant += (" + **verify semi-filter** — the persisted candidate"
-                    " table's id set broadcast-filters the sets side"
-                    " before verify's joins (operators/verify.py)")
 
     def row(level, r):
         mu, sp = mean_spread(level)
@@ -827,9 +811,9 @@ with raw samples: SCALE_NOTES.md "config ladder" + per-config
   0.425) vs the persisted-cache 0.669. Like the bucketed layout, it
   redirects bytes (a distinct + broadcast pass over the candidate
   table) rather than removing them, and on a shared-DRAM-bound box
-  only removal helps. The knob ships OFF, kept for selective-probe
-  regimes (SCALE_NOTES.md round-5 semi-filter section;
-  `semi_filter: true` rows in BENCH/scaling_runs.json).
+  only removal helps. The filter and its knob were then deleted
+  (SCALE_NOTES.md round-5 semi-filter section; `semi_filter: true`
+  rows in BENCH/scaling_runs.json).
 
 {_curve_section(n_convs)}## Dup-pair recall vs oracle
 

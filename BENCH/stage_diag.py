@@ -28,14 +28,6 @@ sys.path.insert(0, REPO)
 EV_ROOT = "/tmp/spark-events-diag"
 
 
-def _diag_cfg():
-    """Pipeline config with env-togglable knobs for A/B runs
-    (DIAG_SEMI_FILTER=0 disables the verify semi-join reduction)."""
-    from jaccard_ml_spark.config import DedupConfig
-    return DedupConfig(
-        verify_semi_filter=os.environ.get("DIAG_SEMI_FILTER", "1") != "0")
-
-
 def run(level: int, tx_path: str) -> None:
     os.environ.setdefault("SPARK_HOME", "/opt/spark")
     from pyspark import StorageLevel
@@ -84,17 +76,17 @@ def run(level: int, tx_path: str) -> None:
     warm_mod = int(os.environ.get("SCALING_WARMUP_MOD", "8"))
     if warm_mod > 0:
         sample = tx.where(F.pmod(F.xxhash64("conv_id"), F.lit(warm_mod)) == 0)
-        wres = dedup_pipeline(sample, _diag_cfg(),
+        wres = dedup_pipeline(sample, DedupConfig(),
                               storage_level=cache_level)
         wres.pairs.count(); wres.clusters.count()
-        wres.shingle_sets.unpersist(); wres.pairs.unpersist()
+        wres.release()
     # marker job: everything after this job id belongs to the timed run
     spark.sparkContext.setJobGroup("diag-marker", "marker")
     spark.range(1).selectExpr("sum(id)").collect()
     spark.sparkContext.setJobGroup("diag-timed", "timed")
 
     t0 = time.monotonic()
-    res = dedup_pipeline(tx, _diag_cfg(), storage_level=cache_level)
+    res = dedup_pipeline(tx, DedupConfig(), storage_level=cache_level)
     n_pairs = res.pairs.count()
     pairs_sec = time.monotonic() - t0
     res.clusters.count()

@@ -33,7 +33,9 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "BENCH"))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from jaccard_ml_spark.session import host_cpus  # noqa: E402
+
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
 # polluted-query retries (0 disables); each retry re-brackets with
 # fresh probes and the FASTEST clean attempt wins
 RETRIES = int(os.environ.get("SPARK_GRAFT_BENCH_RETRIES", "1"))
@@ -141,8 +143,7 @@ def _bench_transcripts(spark, sf: float):
         res = dedup_pipeline(tx, DedupConfig())
         res.pairs.count()
         res.clusters.count()
-        res.shingle_sets.unpersist()
-        res.pairs.unpersist()
+        res.release()
 
     return run, n_turns
 
@@ -161,9 +162,6 @@ def main() -> None:
     weather: dict[str, dict] = {}
     w = Weather()
     from jaccard_ml_spark.operators.similarity import release_persisted
-    from jaccard_ml_spark.operators.verify import (
-        release_persisted as release_verify_persisted,
-    )
 
     def run_one(name, fn):
         rec = _timed(fn, w)
@@ -184,11 +182,10 @@ def main() -> None:
         def fn(name=name):
             df = qs[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
-            # drop the similarity ops' cached vector tables (and any
-            # semi-filter candidate cache) between queries so a bench
-            # loop can't accumulate executor storage (ADVICE r2)
+            # drop the similarity ops' cached vector tables between
+            # queries so a bench loop can't accumulate executor storage
+            # (ADVICE r2)
             release_persisted()
-            release_verify_persisted()
         run_one(name, fn)
 
     tx_run, n_turns = _bench_transcripts(spark, sf)

@@ -58,14 +58,6 @@ class DedupConfig:
     #         clusters with small executors and as the SQL-mirrorable
     #         reference implementation.
     shingle_impl: str = "arrow"
-    # Semi-join reduction on the verify join's sets side (operators/
-    # verify.py): candidate ids broadcast-filter the sets table before
-    # the exact-Jaccard join. OFF by default: the candidate subtree is
-    # uncached and gets evaluated twice (broadcast + join), which a
-    # 45M-turn A/B measured 32% slower than shuffling the full sets
-    # table. Enable for selective probe regimes (tiny candidate sets
-    # over a huge corpus).
-    verify_semi_filter: bool = False
     # --- misc ----------------------------------------------------------
     text_separator: str = "\n"    # turn joiner for conversation assembly
 

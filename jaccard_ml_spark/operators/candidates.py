@@ -161,10 +161,11 @@ def _band_split_buckets(mega: DataFrame, signatures: DataFrame,
 
 
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
-                    cache: bool = True, auto_tune: bool = False,
+                    auto_tune: bool = False,
                     tuned: dict | None = None,
                     signatures_persisted: bool = False,
-                    storage_level=None) -> DataFrame:
+                    storage_level=None,
+                    held: list | None = None) -> DataFrame:
     """LSH candidate pairs (id_a, id_b), skew-aware, exactly-once.
 
     Returns distinct canonical pairs. The union of three strategies by
@@ -186,18 +187,22 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     unpersisted bucket table re-runs the MinHash UDF once per branch
     (measured 48 Arrow evals in the naive plan). On a production
     cluster this is the checkpointed signature/bucket Iceberg table.
+
+    Every table persisted here is appended to ``held``; the caller
+    unpersists them once the returned pairs are materialized.
     """
-    if cache and not signatures_persisted:
+    held = [] if held is None else held
+    if not signatures_persisted:
         # mega-bucket band splitting joins signatures back by id; keep
         # them warm so the (rare) branch doesn't recompute the UDF.
-        # ``signatures_persisted=True`` (the fused-pipeline path) means
-        # the caller's cache already holds the signature column — a
-        # second persist would duplicate ~1 KB/conversation of cache
-        # and, worse, at a DIFFERENT storage tier than the caller's
-        # pinned one (the N-vs-4N tier asymmetry BENCH/scaling.py
+        # ``signatures_persisted=True`` means the caller's cache or
+        # checkpoint already holds them; a second persist would
+        # duplicate ~1 KB/conversation of cache, at a tier other than
+        # the caller's pinned one (the asymmetry BENCH/scaling.py
         # guards against).
         signatures = (signatures.persist(storage_level) if storage_level
                       else signatures.persist())
+        held.append(signatures)
     buckets = lsh_buckets(signatures, cfg)
     # ONE exchange: group each bucket's members together. Everything
     # below works on the grouped table — within-bucket pairs are
@@ -208,15 +213,15 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
         F.sort_array(F.collect_list("id")).alias("members"),
         F.count("*").alias("bucket_size"),
     )
-    if cache:
-        # persisted: the strategy branches below share this subtree, and
-        # a cold cache races under AQE (branches each materialize it).
-        # Materialization rides on the first driver aggregate below
-        # (auto-tune histogram or strategy-class probe) — an aggregate
-        # computes every partition, populating the cache in the same
-        # job, so no separate eager count() barrier is paid.
-        grouped = (grouped.persist(storage_level) if storage_level
-                   else grouped.persist())
+    # persisted: the strategy branches below share this subtree, and
+    # a cold cache races under AQE (branches each materialize it).
+    # Materialization rides on the first driver aggregate below
+    # (auto-tune histogram or strategy-class probe) — an aggregate
+    # computes every partition, populating the cache in the same
+    # job, so no separate eager count() barrier is paid.
+    grouped = (grouped.persist(storage_level) if storage_level
+               else grouped.persist())
+    held.append(grouped)
 
     if auto_tune:
         from jaccard_ml_spark.operators.autotune import (
@@ -239,32 +244,26 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     # that hold no local data (measured 3-4 s PER near-empty stage on
     # the scaling harness, ~20 s per run across the five arms). One
     # tiny aggregate on the already-persisted fan-out table tells us
-    # which classes exist; when `cache` is off (no persisted table to
-    # read cheaply) every branch is kept, preserving laziness.
-    if cache:
-        cls = grouped.select(
-            F.sum(((F.col("bucket_size") > c0)
-                   & (F.col("bucket_size") <= c1)).cast("long"))
-            .alias("n_hot"),
-            F.sum((F.col("bucket_size") > c1).cast("long")).alias("n_mega"),
-        ).first()
-        has_hot = bool(cls.n_hot)
-        has_mega = bool(cls.n_mega)
-    else:
-        has_hot = has_mega = True
+    # which classes exist.
+    cls = grouped.select(
+        F.sum(((F.col("bucket_size") > c0)
+               & (F.col("bucket_size") <= c1)).cast("long"))
+        .alias("n_hot"),
+        F.sum((F.col("bucket_size") > c1).cast("long")).alias("n_mega"),
+    ).first()
 
     normal = grouped.where(
         (F.col("bucket_size") > 1) & (F.col("bucket_size") <= c0))
     pairs = _pairs_from_members(normal)
 
-    if has_hot:
+    if cls.n_hot:
         hot = grouped.where(
             (F.col("bucket_size") > c0) & (F.col("bucket_size") <= c1)
         ).select("band_id", "bucket_hash",
                  F.explode("members").alias("id"))
         pairs = pairs.unionByName(_salted_pairs(hot, cfg.salt_factor))
 
-    if has_mega:
+    if cls.n_mega:
         mega = grouped.where(F.col("bucket_size") > c1).select(
             "band_id", "bucket_hash", F.explode("members").alias("id"))
         # refined mega buckets: size-1 refined buckets drop out

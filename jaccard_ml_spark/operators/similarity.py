@@ -588,8 +588,8 @@ def _topk_from_scored(scored: DataFrame, k: int) -> DataFrame:
     # `scored` twice — and since the candidate subtree above it (bucket
     # UDF → groupBy → pairing → joins → scoring) is deliberately never
     # cached, a union would EVALUATE that whole subtree twice per
-    # action (measured ~2× the query wall at sf0.1; same failure class
-    # as the rejected uncached verify semi-filter, verify.py:49-59).
+    # action (measured ~2× the query wall at sf0.1; the same failure
+    # sank the verify semi-filter, deleted after two 45M-turn A/Bs).
     sym = scored.select(F.explode(F.array(
         F.struct(F.col("id_a"), F.col("id_b"), F.col("cosine")),
         F.struct(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"),

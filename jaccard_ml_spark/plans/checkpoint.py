@@ -11,9 +11,11 @@ commits give exactly-once stage completion); in this sandbox the same
 protocol runs on parquet directories with an atomically-renamed
 ``_STAGE_COMPLETE`` marker. The public API is identical.
 
+Each marker records the stage's row count, observed during the write
+(``Observation``) instead of by scanning the checkpoint again.
+
 Two side tables per run:
-  lineage  (run_id, stage, input_rows, output_rows, started_utc,
-            seconds, partition_count)
+  lineage  (run_id, stage, output_rows, seconds, partition_count)
   metrics  (run_id, key, value)
 """
 
@@ -22,8 +24,17 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count attached that its next action records."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class CheckpointStore:
@@ -48,23 +59,19 @@ class CheckpointStore:
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._dir(stage))
 
-    def write(self, stage: str, df: DataFrame,
-              partition_by: list[str] | None = None) -> DataFrame:
-        """Materialize a stage; atomic completion marker; returns the
-        re-read DataFrame (truncates lineage like the reference's
-        .met.bin reload)."""
-        t0 = time.monotonic()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._dir(stage))
-        out = self.read(stage)
-        n = out.count()
+    def rows(self, stage: str) -> int:
+        """Row count of a completed stage, from its marker."""
+        with open(self._marker(stage)) as f:
+            return json.load(f)["rows"]
+
+    def _commit(self, stage: str, obs: Observation, t0: float,
+                out: DataFrame, **marker) -> DataFrame:
+        n = obs.get["rows"]
         elapsed = time.monotonic() - t0
         tmp = self._marker(stage) + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"run_id": self.run_id, "stage": stage,
-                       "rows": n, "seconds": elapsed}, f)
+                       "rows": n, "seconds": elapsed, **marker}, f)
         os.replace(tmp, self._marker(stage))  # atomic completion commit
         self._lineage.append({
             "run_id": self.run_id, "stage": stage, "output_rows": n,
@@ -72,6 +79,17 @@ class CheckpointStore:
             "partition_count": out.rdd.getNumPartitions(),
         })
         return out
+
+    def write(self, stage: str, df: DataFrame) -> DataFrame:
+        """Materialize a stage; atomic completion marker; returns the
+        re-read DataFrame (truncates lineage like the reference's
+        .met.bin reload). The written schema is handed to the reader,
+        which then infers nothing from the files."""
+        t0 = time.monotonic()
+        df, obs = _observed(df)
+        df.write.mode("overwrite").parquet(self._dir(stage))
+        out = self.spark.read.schema(df.schema).parquet(self._dir(stage))
+        return self._commit(stage, obs, t0, out)
 
     def write_bucketed(self, stage: str, df: DataFrame,
                        bucket_cols: list[str], n_buckets: int = 16,
@@ -90,6 +108,7 @@ class CheckpointStore:
         """
         t0 = time.monotonic()
         table = f"ckpt_{self.run_id}_{stage}".replace("-", "_")
+        df, obs = _observed(df)
         writer = (df.write.mode("overwrite").format("parquet")
                   .option("path", self._dir(stage))
                   .bucketBy(n_buckets, *bucket_cols))
@@ -97,22 +116,8 @@ class CheckpointStore:
             writer = writer.sortBy(*sort_cols)
         self.spark.sql(f"DROP TABLE IF EXISTS {table}")
         writer.saveAsTable(table)
-        out = self.spark.table(table)
-        n = out.count()
-        elapsed = time.monotonic() - t0
-        tmp = self._marker(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"run_id": self.run_id, "stage": stage,
-                       "rows": n, "seconds": elapsed,
-                       "bucketed_by": bucket_cols,
-                       "n_buckets": n_buckets}, f)
-        os.replace(tmp, self._marker(stage))
-        self._lineage.append({
-            "run_id": self.run_id, "stage": stage, "output_rows": n,
-            "seconds": elapsed,
-            "partition_count": out.rdd.getNumPartitions(),
-        })
-        return out
+        return self._commit(stage, obs, t0, self.spark.table(table),
+                            bucketed_by=bucket_cols, n_buckets=n_buckets)
 
     def stage(self, name: str, build) -> DataFrame:
         """Resume-or-compute: the core protocol.
@@ -133,10 +138,14 @@ class CheckpointStore:
             {"run_id": self.run_id, "key": key, "value": float(value)})
 
     def flush_tables(self) -> None:
-        if self._lineage:
-            self.spark.createDataFrame(self._lineage).write.mode(
-                "append").parquet(f"{self.root}/_lineage")
-        if self._metrics:
-            self.spark.createDataFrame(self._metrics).write.mode(
-                "append").parquet(f"{self.root}/_metrics")
+        """Append the run's lineage and metrics rows: one parquet file
+        per table, written from pandas on the driver like the markers,
+        so no Spark job and no Python worker runs for them."""
+        for name, rows in (("_lineage", self._lineage),
+                           ("_metrics", self._metrics)):
+            if rows:
+                os.makedirs(f"{self.root}/{name}", exist_ok=True)
+                pd.DataFrame(rows).to_parquet(
+                    f"{self.root}/{name}/part-{uuid.uuid4().hex}.parquet",
+                    index=False)
         self._lineage, self._metrics = [], []

@@ -1,29 +1,27 @@
-"""Resumable end-to-end dedup job over the checkpoint store.
+"""Resumable end-to-end dedup job: the stage graph of plans/pipeline.py
+under the ``Checkpoint`` policy.
 
-Same dataflow as plans/pipeline.py, but every stage goes through
+Every stage (sets, candidates, pairs, clusters) goes through
 CheckpointStore.stage(): a killed job rerun with the same root resumes
 after the last completed stage and produces byte-identical output (the
-resume-equals-fresh invariant, SURVEY §5).
+resume-equals-fresh invariant, SURVEY §5). The root holds only those
+stages plus the lineage and metrics tables. Conversations are not
+checkpointed: only the sets stage reads them, and after a resume the
+lazy assembly (one groupBy) rebuilds them on demand.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from jaccard_ml_spark.config import DedupConfig
 from jaccard_ml_spark.operators.assemble import assemble_conversations
-from jaccard_ml_spark.operators.candidates import (
-    candidate_pairs,
-    minhash_signatures,
-)
-from jaccard_ml_spark.operators.cluster import (
-    assign_clusters,
-    connected_components,
-)
-from jaccard_ml_spark.operators.verify import verify_pairs
 from jaccard_ml_spark.plans.checkpoint import CheckpointStore
-from jaccard_ml_spark.plans.pipeline import shingle_sets_from_conversations
+from jaccard_ml_spark.plans.pipeline import (
+    Checkpoint,
+    conversation_docs,
+    run_stages,
+)
 
 
 def run_resumable_dedup(
@@ -34,7 +32,9 @@ def run_resumable_dedup(
     run_id: str = "dedup",
     auto_tune: bool = False,
 ) -> dict[str, DataFrame]:
-    """Execute (or resume) the pipeline; returns the stage tables.
+    """Execute (or resume) the pipeline; returns the stage tables by
+    name (``docs`` — the lazily assembled conversations — and one
+    checkpoint per stage of ``STAGES``).
 
     ``auto_tune=True`` derives the skew knobs from the observed
     bucket-size histogram (operators/autotune.py) and records the
@@ -43,39 +43,15 @@ def run_resumable_dedup(
     hand-picked.
     """
     store = CheckpointStore(spark, checkpoint_root, run_id)
-
-    conversations = store.stage(
-        "s1_conversations",
-        lambda: assemble_conversations(transcripts, cfg.text_separator))
-    sets_df = store.stage(
-        "s2_shingles",
-        lambda: shingle_sets_from_conversations(conversations, cfg))
-    signatures = store.stage(
-        "s3_signatures", lambda: minhash_signatures(sets_df, cfg))
+    docs = conversation_docs(
+        assemble_conversations(transcripts, cfg.text_separator))
     tuned: dict = {}
-    cands = store.stage(
-        "s4_candidates",
-        lambda: candidate_pairs(signatures, cfg, auto_tune=auto_tune,
-                                tuned=tuned))
+    tables = run_stages(docs, cfg, Checkpoint(store),
+                        tuned=tuned if auto_tune else None)
     for k, v in tuned.items():
         store.metric(f"autotune.{k}", float(v))
-    pairs = store.stage(
-        "s5_pairs",
-        lambda: verify_pairs(cands, sets_df, cfg.jaccard_threshold))
-    clusters = store.stage(
-        "s6_clusters",
-        lambda: assign_clusters(
-            sets_df, connected_components(pairs, cfg.cc_max_iterations)))
-
-    store.metric("pairs.count", pairs.count())
-    store.metric("clusters.count",
-                 clusters.select("cluster_id").distinct().count())
+    store.metric("pairs.count", store.rows("pairs"))
+    store.metric("clusters.count", tables["clusters"]
+                 .select("cluster_id").distinct().count())
     store.flush_tables()
-    return {
-        "conversations": conversations,
-        "shingle_sets": sets_df,
-        "signatures": signatures,
-        "candidates": cands,
-        "pairs": pairs,
-        "clusters": clusters,
-    }
+    return tables

@@ -8,9 +8,45 @@ work distribution, SURVEY §4 P1/P3/P6).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import SparkSession
+
+def _cgroup(path: str) -> list[str]:
+    try:
+        with open(path) as f:
+            return f.read().split()
+    except OSError:
+        return []
+
+
+def host_cpus() -> int:
+    """CPUs in the affinity mask, capped by a cgroup CPU quota if set."""
+    n = len(os.sched_getaffinity(0))
+    quota = (_cgroup("/sys/fs/cgroup/cpu.max")                       # v2
+             or _cgroup("/sys/fs/cgroup/cpu/cpu.cfs_quota_us")
+             + _cgroup("/sys/fs/cgroup/cpu/cpu.cfs_period_us"))      # v1
+    if len(quota) == 2 and quota[0].isdigit():       # not "max" / "-1"
+        n = min(n, max(1, math.ceil(int(quota[0]) / int(quota[1]))))
+    return n
+
+
+def host_memory_bytes() -> int:
+    """Physical memory, capped by a cgroup memory limit if set."""
+    limits = (_cgroup("/sys/fs/cgroup/memory.max")                  # v2
+              + _cgroup("/sys/fs/cgroup/memory/memory.limit_in_bytes"))
+    return min([os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+               + [int(x) for x in limits if x.isdigit()])
+
+
+def driver_memory_mb(mem_bytes: int) -> int:
+    """Default driver heap: half of memory, so the Python workers (one
+    per task thread), the page cache and the launching process keep the
+    other half; in 256 MiB steps, capped at 31 GiB so the JVM keeps
+    compressed object pointers."""
+    mb = min(mem_bytes // 2, 31 << 30) >> 20
+    return mb if mb < 256 else mb // 256 * 256
 
 
 def get_spark(
@@ -24,6 +60,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster the job is submitted via ``spark-submit --py-files`` and the
     master comes from the submit environment (pass ``master=None`` there).
+    Unset, ``SPARK_GRAFT_CPUS`` is the host's usable CPU count and
+    ``SPARK_GRAFT_DRIVER_MEM`` is ``driver_memory_mb`` of its memory.
     """
     # glibc malloc tunables for the JVM and every forked Python worker.
     # Without these, each multi-MB Arrow/numpy/shuffle buffer >128 KB is
@@ -44,7 +82,7 @@ def get_spark(
     for k, v in _MALLOC_ENV.items():
         os.environ.setdefault(k, v)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus())
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         master = f"local[{cpus}]"
@@ -95,10 +133,10 @@ def get_spark(
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold":
             "65536",
         # local mode: driver heap hosts every task's sort/join/window
-        # buffers plus the block-manager cache — size for the thread
-        # count (8g starves 32 concurrent tasks into GC thrash)
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
-                                              "32g"),
+        # buffers plus the block-manager cache; a fixed default either
+        # starves a large host or OOM-kills the JVM on a small one
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or
+            f"{driver_memory_mb(host_memory_bytes())}m",
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # keep per-batch Arrow IPC buffers well under the 32 MiB glibc

@@ -1,5 +1,9 @@
 """spark-submit entry point for the dedup pipeline.
 
+Runs the stage graph of ``plans/pipeline.py`` under the checkpoint
+policy (``plans.resumable.run_resumable_dedup``); rerunning with the
+same ``--output`` root resumes after the last completed stage.
+
 Cluster usage (the production shape the north rule mandates):
 
     python -m zipfile -c dist/jaccard_ml_spark.zip jaccard_ml_spark
@@ -8,7 +12,7 @@ Cluster usage (the production shape the north rule mandates):
         jobs/dedup.py \
         --input  <path or iceberg table of transcripts> \
         --output <checkpoint root> \
-        --threshold 0.8 [--resume]
+        --threshold 0.8
 
 Local smoke (this sandbox):
 

@@ -47,11 +47,10 @@ def results(spark, transcripts, tmp_path_factory):
     store = CheckpointStore(spark, str(ckpt), run_id="tbkt")
     bucketed = dedup_pipeline(transcripts, CFG, sets_store=store,
                               sets_buckets=8)
-    cached = dedup_pipeline(transcripts, CFG, cache=True)
+    cached = dedup_pipeline(transcripts, CFG)
     yield bucketed, cached
-    cached.shingle_sets.unpersist()
-    cached.pairs.unpersist()
-    bucketed.pairs.unpersist()
+    cached.release()
+    bucketed.release()
     spark.sql("DROP TABLE IF EXISTS ckpt_tbkt_fused_sets")
 
 

@@ -130,6 +130,5 @@ def test_fused_pipeline_caches_once(spark):
     _walk(res.pairs._jdf.queryExecution().executedPlan())
     n_python = sum(1 for v in python_caches.values() if v)
     assert n_python == 1, python_caches
-    res.shingle_sets.unpersist()
-    res.pairs.unpersist()
+    res.release()
     spark.catalog.clearCache()

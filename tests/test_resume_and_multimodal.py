@@ -2,20 +2,59 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from jaccard_ml_spark.config import DedupConfig
+from jaccard_ml_spark.operators.assemble import assemble_conversations
+from jaccard_ml_spark.operators.candidates import bucket_stats, lsh_buckets
 from jaccard_ml_spark.operators.multimodal import (
     extract_features,
     synthesize_media,
+)
+from jaccard_ml_spark.plans.checkpoint import CheckpointStore
+from jaccard_ml_spark.plans.pipeline import (
+    STAGES,
+    Checkpoint,
+    conversation_docs,
+    dedup_pipeline,
+    run_stages,
 )
 from jaccard_ml_spark.plans.resumable import run_resumable_dedup
 from jaccard_ml_spark.sources.generator import generate_transcripts
 from jaccard_ml_spark.sources.tables import read_transcripts
 
 CFG = DedupConfig()
+STAGE_NAMES = [s.name for s in STAGES]
 
 
 def _clusters(res):
     return sorted((r.id, r.cluster_id) for r in res["clusters"].collect())
+
+
+def _pairs(res):
+    return sorted(tuple(r) for r in res["pairs"].select(
+        "id_a", "id_b", "intersection", "size_a", "size_b",
+        "jaccard").collect())
+
+
+class _Killed(Exception):
+    pass
+
+
+class _KillAfter(Checkpoint):
+    """The job's checkpoint policy, killed once ``last`` is written."""
+
+    def __init__(self, store, last):
+        super().__init__(store)
+        self.last = last
+
+    def materialize(self, stage, build):
+        out = super().materialize(stage, build)
+        if stage.name == self.last:
+            raise _Killed(stage.name)
+        return out
 
 
 def test_resume_equals_fresh(spark, tmp_path):
@@ -23,33 +62,81 @@ def test_resume_equals_fresh(spark, tmp_path):
     tx = read_transcripts(spark, meta["transcripts"])
 
     fresh = run_resumable_dedup(spark, tx, CFG, str(tmp_path / "cp_fresh"))
-    fresh_clusters = _clusters(fresh)
 
-    # simulate a killed job: run stages 1-3 only, then "restart"
+    # simulate a job killed right after the graph's first stage (sets)
     partial_root = str(tmp_path / "cp_partial")
-    from jaccard_ml_spark.operators.assemble import assemble_conversations
-    from jaccard_ml_spark.operators.candidates import minhash_signatures
-    from jaccard_ml_spark.plans.checkpoint import CheckpointStore
-    from jaccard_ml_spark.plans.pipeline import (
-        shingle_sets_from_conversations,
-    )
-
     store = CheckpointStore(spark, partial_root)
-    conv = store.stage("s1_conversations",
-                       lambda: assemble_conversations(tx, CFG.text_separator))
-    sets_df = store.stage(
-        "s2_shingles", lambda: shingle_sets_from_conversations(conv, CFG))
-    store.stage("s3_signatures", lambda: minhash_signatures(sets_df, CFG))
+    first = STAGES[0].name
+    with pytest.raises(_Killed):
+        run_stages(conversation_docs(
+            assemble_conversations(tx, CFG.text_separator)), CFG,
+            _KillAfter(store, first))
+    assert [s for s in STAGE_NAMES if store.has(s)] == [first]
 
-    # restart: completed stages must be read, not recomputed
+    # restart: the completed stage is read, not recomputed
     resumed = run_resumable_dedup(spark, tx, CFG, partial_root)
-    assert _clusters(resumed) == fresh_clusters
+    assert _clusters(resumed) == _clusters(fresh)
+    assert _pairs(resumed) == _pairs(fresh)
+    resumed_keys = {r.key for r in spark.read.parquet(
+        f"{partial_root}/_metrics").collect()}
+    assert f"{first}.resumed" in resumed_keys
+    assert not {f"{s}.resumed" for s in STAGE_NAMES[1:]} & resumed_keys
 
-    # markers present for all 6 stages after the resumed run
-    s2 = CheckpointStore(spark, partial_root)
-    for st in ["s1_conversations", "s2_shingles", "s3_signatures",
-               "s4_candidates", "s5_pairs", "s6_clusters"]:
-        assert s2.has(st)
+    # the root holds exactly the graph's stages and the side tables
+    assert all(store.has(s) for s in STAGE_NAMES)
+    assert sorted(os.listdir(partial_root)) == sorted(
+        [*STAGE_NAMES, "_lineage", "_metrics"])
+
+
+def test_resumable_equals_pipeline_on_skewed_corpus(spark, tmp_path):
+    """The shipped job and the in-memory pipeline run one stage graph
+    under two policies: on a corpus where 40 % of conversations share a
+    boilerplate turn, with thresholds lowered so the hot (salted) and
+    mega (band-split) pairing branches run, their pairs and clusters
+    are identical, and every marker's observed row count is exact.
+    Short conversations keep the boilerplate a large share of each hot
+    set, so whole bands of their signatures agree."""
+    cfg = DedupConfig(salt_threshold_c0=6, band_split_c1=16)
+    meta = generate_transcripts(str(tmp_path / "tx"), n_convs=200, seed=5,
+                                frac_hot=0.4, min_turns=1, max_turns=2)
+    tx = read_transcripts(spark, meta["transcripts"])
+    root = str(tmp_path / "cp")
+    shipped = run_resumable_dedup(spark, tx, cfg, root)
+    ref = dedup_pipeline(tx, cfg)
+    try:
+        sizes = [r.bucket_size for r in bucket_stats(
+            lsh_buckets(ref.signatures, cfg)).collect()]
+        assert any(cfg.salt_threshold_c0 < n <= cfg.band_split_c1
+                   for n in sizes), "no hot bucket"
+        assert max(sizes) > cfg.band_split_c1, "no mega bucket"
+        assert _pairs(shipped) == _pairs(vars(ref))
+        assert _clusters(shipped) == _clusters(vars(ref))
+    finally:
+        ref.release()
+
+    store = CheckpointStore(spark, root)
+    for st in STAGE_NAMES:
+        assert store.rows(st) == store.read(st).count(), st
+
+
+def test_marker_rows_of_empty_stages(spark, tmp_path):
+    """Conversations that share no shingle: the candidates and pairs
+    stages are empty, and their markers say 0 rows."""
+    tx = spark.createDataFrame(
+        [(f"c{i}", 0, "user", " ".join(f"w{i}x{j}" for j in range(12)),
+          None, None) for i in range(6)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp")
+    root = str(tmp_path / "cp")
+    run_resumable_dedup(spark, tx, CFG, root)
+    store = CheckpointStore(spark, root)
+    assert store.rows("candidates") == store.rows("pairs") == 0
+    for st in STAGE_NAMES:
+        assert store.rows(st) == store.read(st).count(), st
+    empty = store.write_bucketed("empty", spark.range(0), ["id"],
+                                 n_buckets=2)
+    assert store.rows("empty") == empty.count() == 0
+    spark.sql("DROP TABLE IF EXISTS ckpt_run_empty")
 
 
 def test_bucketed_checkpoint_join_has_no_sets_side_exchange(
@@ -58,13 +145,8 @@ def test_bucketed_checkpoint_join_has_no_sets_side_exchange(
     shingle-set checkpoint bucketed by id joins the pair table with NO
     exchange above the bucketed scan — only the slim pair side
     shuffles; the fat array side reads in place."""
-    from pyspark.sql import functions as F
-
-    from jaccard_ml_spark.plans.checkpoint import CheckpointStore
-
     meta = generate_transcripts(str(tmp_path / "tx"), n_convs=80, seed=21)
     tx = read_transcripts(spark, meta["transcripts"])
-    from jaccard_ml_spark.operators.assemble import assemble_conversations
     from jaccard_ml_spark.plans.pipeline import (
         shingle_sets_from_conversations,
     )
